@@ -50,7 +50,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from beavers_spark.streaming.maintenance import table_exists
+from beavers_spark.streaming.maintenance import overwrite_partitions, table_exists
 
 UTC_EPOCH = pd.Timestamp(0, tz="UTC")
 
@@ -339,13 +339,7 @@ class AlignedReleaseDriver:
             self._released += n
             self.on_release(out)
         if has_rest:
-            (
-                rest.repartition(F.col(self._STAGE_COL))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(self._STAGE_COL)
-                .parquet(self.staging_dir)
-            )
+            overwrite_partitions(rest, self.staging_dir, self._STAGE_COL)
             doomed = [h for h in self._list_partitions() if h < boundary]
         else:
             doomed = [h for h in self._list_partitions() if h <= boundary]

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from beavers_spark.functions.dedup import MAX_LOCAL_CC_EDGES, connected_components
 from beavers_spark.streaming.maintenance import (
     BatchWatermark,
+    overwrite_partitions,
     recover_compaction,
     table_exists,
 )
@@ -147,13 +148,7 @@ class IncrementalClusters:
             r[0] for r in merged.select(_BUCKET).distinct().collect()
         }
         if kept_buckets:
-            (
-                merged.repartition(len(kept_buckets), F.col(_BUCKET))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(_BUCKET)
-                .parquet(self.path)
-            )
+            overwrite_partitions(merged, self.path, _BUCKET)
         # a bucket whose every row was a victim gets no output row, so
         # the dynamic overwrite cannot clear it — remove it explicitly
         # (the empty-partition trap, maintenance.forget_partition_rows)
@@ -296,18 +291,6 @@ class IncrementalClusters:
                 updates.select("doc_id"), "doc_id", "left_anti"
             )
             merged = updates.unionByName(untouched_rows)
-        (
-            # no explicit partition count: AQE sizes the exchange, so
-            # a small wave's touched buckets are written by a handful
-            # of coalesced tasks instead of a fixed n_buckets-task
-            # shuffle (same bucket directories either way — dynamic
-            # overwrite replaces exactly the touched ones; the
-            # e34214a registry-write lesson, r14)
-            merged.repartition(F.col(_BUCKET))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(_BUCKET)
-            .parquet(self.path)
-        )
+        overwrite_partitions(merged, self.path, _BUCKET)
         self._initialized = True
         self._watermark.mark(batch_id)

@@ -14,14 +14,14 @@ off the merged sketch. Spark ships this natively
 (``hll_sketch_agg`` / ``hll_union_agg`` / ``hll_sketch_estimate``, all
 JVM-side), so the whole pipeline stays in whole-stage codegen.
 
-Per batch (mirroring ``ContinuousRollup``'s touched-buckets discipline):
-the batch is sketched per (bucket, keys) — a few KB per group no matter
-how many rows — merged with the stored sketches of JUST the touched
-buckets (partition-pruned read), and written back via dynamic partition
-overwrite. Cost is O(batch + touched-bucket groups); history is never
-re-read. At 100 TB this is the standard design for "daily uniques over
-years of events": state size is groups x sketch bytes, not groups x
-entity sets.
+The kernel is one of the partition-keyed kernels sharing
+``maintenance.MergeWave`` (docs/concepts/state_kernels.md states the
+wave contract): it sketches the batch per (bucket, keys) — a few KB per
+group no matter how many rows; rows with a null event time have no
+bucket and are dropped — and its merge is ``hll_union_agg`` over the
+touched buckets' stored sketches. At 100 TB this is the standard design
+for "daily uniques over years of events": state size is groups x sketch
+bytes, not groups x entity sets.
 
 Reference parity: extends the reference's state-node fold
 (dag.py:501-518) with a mergeable-aggregate state the reference cannot
@@ -33,11 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from beavers_spark.streaming.maintenance import (
-    BatchWatermark,
-    recover_compaction,
-    table_exists,
-)
+from beavers_spark.streaming.maintenance import MergeWave
 
 
 class ContinuousDistinct:
@@ -70,8 +66,7 @@ class ContinuousDistinct:
         self.entity_col = entity_col
         self.bucket = bucket
         self.lg_config_k = lg_config_k
-        self._initialized = False
-        self._watermark = BatchWatermark(path)
+        self._wave = MergeWave(path, "bucket")
 
     def _sketch(self, df: DataFrame) -> DataFrame:
         return (
@@ -86,67 +81,16 @@ class ContinuousDistinct:
             )
         )
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # restore a compaction crashed between compact_parquet's two
-        # renames BEFORE the watermark check or any write (review r8)
-        recover_compaction(self.path)
-        # sketch merging is idempotent ONLY for identical re-delivered
-        # batches; guard anyway so replays cost nothing
-        if self._watermark.is_applied(batch_id) or batch_df.isEmpty():
-            return
-        # null event time has no bucket; a None touched entry never
-        # isin-matches yet dynamic overwrite would still clobber the
-        # null partition with only this batch's delta (state loss)
-        batch_df = batch_df.filter(F.col(self.ts_col).isNotNull())
-        spark = batch_df.sparkSession
-        delta = self._sketch(batch_df)
-        if self._initialized or self._table_exists(spark):
-            # probe on the RAW batch (the sibling rollups' discipline):
-            # probing delta re-executed the whole sketch aggregation a
-            # second time for the collect — the batch's bucket set is
-            # identical either way
-            touched = [
-                r["bucket"]
-                for r in batch_df.select(
-                    F.window(F.col(self.ts_col), self.bucket).start.alias(
-                        "bucket"
-                    )
-                )
-                .distinct()
-                .collect()
-            ]
-            if not touched:  # every row was null-ts: nothing to merge
-                self._watermark.mark(batch_id)
-                return
-            current = (
-                spark.read.parquet(self.path)
-                .filter(F.col("bucket").isin(touched))
-                .localCheckpoint()
-            )
-            merged = (
-                delta.unionByName(current)
-                .groupBy("bucket", *self.keys)
-                .agg(F.hll_union_agg("sketch").alias("sketch"))
-            )
-        else:
-            merged = delta
-        # per-write dynamic overwrite (replaces only the partitions in
-        # `merged`) without mutating the shared session's semantics; the
-        # bucket repartition clusters rows so each touched bucket gets
-        # ONE file per batch instead of one per (task, bucket) — the
-        # splinter the sibling rollups also guard against
-        (
-            merged.repartition(F.col("bucket"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.path)
+    def _merge(self, delta: DataFrame, current: DataFrame) -> DataFrame:
+        return (
+            delta.unionByName(current)
+            .groupBy("bucket", *self.keys)
+            .agg(F.hll_union_agg("sketch").alias("sketch"))
         )
-        self._initialized = True
-        self._watermark.mark(batch_id)
 
-    def _table_exists(self, spark: SparkSession) -> bool:
-        return table_exists(spark, self.path)
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        delta = self._sketch(batch_df.filter(F.col(self.ts_col).isNotNull()))
+        self._wave(delta, batch_id, self._merge)
 
     def read(self, spark: SparkSession) -> DataFrame:
         """Current estimates: (bucket, *keys, n_distinct)."""

@@ -177,6 +177,48 @@ class ProgressCollector(StreamingQueryListener):
         return sum(p["num_input_rows"] for p in self.progress)
 
 
+def _staleness_monitor(
+    stream_df: DataFrame,
+    key_cols: list[str],
+    ts_col: str,
+    timeout_conf: str,
+    arm: Callable[[GroupState, pd.Timestamp], None],
+) -> DataFrame:
+    """The per-key watchdog both timeout monitors share: a timed-out key
+    emits one stale=true row and drops its state; an updated key folds
+    its newest timestamp into state, re-arms via ``arm(state, newest)``
+    and emits a stale=false row. Output ``(keys..., last_seen, stale)``."""
+    key_schema = ", ".join(
+        f"{c} {stream_df.schema[c].dataType.simpleString()}" for c in key_cols
+    )
+    columns = [*key_cols, "last_seen", "stale"]
+
+    def monitor(key, batches, state: GroupState):
+        if state.hasTimedOut:
+            (last_seen,) = state.get
+            state.remove()
+            yield pd.DataFrame([[*key, last_seen, True]], columns=columns)
+            return
+        newest = None
+        for pdf in batches:
+            batch_max = pdf[ts_col].max()
+            if newest is None or batch_max > newest:
+                newest = batch_max
+        if newest is None:
+            return
+        state.update((newest,))
+        arm(state, newest)
+        yield pd.DataFrame([[*key, newest, False]], columns=columns)
+
+    return stream_df.groupBy(*key_cols).applyInPandasWithState(
+        monitor,
+        outputStructType=f"{key_schema}, last_seen timestamp, stale boolean",
+        stateStructType="last_seen timestamp",
+        outputMode="update",
+        timeoutConf=timeout_conf,
+    )
+
+
 def streaming_timeout_monitor(
     stream_df: DataFrame,
     key_cols: list[str],
@@ -193,46 +235,17 @@ def streaming_timeout_monitor(
     is one timestamp per key in the state store — bounded, no driver
     involvement.
 
-    Note: Spark 4's ``transformWithStateInPandas`` (arbitrary state v2,
-    first-class ``registerTimer``) is the successor API for this
-    pattern; its Python side needs protobuf, which this environment
-    doesn't ship, so the GroupState timeout formulation here is the
-    portable implementation.
+    Spark 4's ``transformWithStateInPandas`` (first-class per-key
+    ``registerTimer``) would express the same contract, but its Python
+    worker needs protobuf; the GroupState timeout formulation here runs
+    wherever that one would, with the same output.
     """
-    key_schema = ", ".join(
-        f"{c} {stream_df.schema[c].dataType.simpleString()}" for c in key_cols
-    )
-    out_schema = f"{key_schema}, last_seen timestamp, stale boolean"
-    state_schema = "last_seen timestamp"
-
-    def monitor(key, batches, state: GroupState):
-        if state.hasTimedOut:
-            (last_seen,) = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [[*key, last_seen, True]],
-                columns=[*key_cols, "last_seen", "stale"],
-            )
-            return
-        newest = None
-        for pdf in batches:
-            batch_max = pdf[ts_col].max()
-            if newest is None or batch_max > newest:
-                newest = batch_max
-        if newest is None:
-            return
-        state.update((newest,))
-        state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame(
-            [[*key, newest, False]], columns=[*key_cols, "last_seen", "stale"]
-        )
-
-    return stream_df.groupBy(*key_cols).applyInPandasWithState(
-        monitor,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return _staleness_monitor(
+        stream_df,
+        key_cols,
+        ts_col,
+        GroupStateTimeout.ProcessingTimeTimeout,
+        lambda state, newest: state.setTimeoutDuration(timeout_ms),
     )
 
 
@@ -306,51 +319,22 @@ def streaming_event_timeout_monitor(
     parity promise applied to timers; its replay timers are likewise
     event-time driven, replay.py:230).
     """
-    key_schema = ", ".join(
-        f"{c} {stream_df.schema[c].dataType.simpleString()}" for c in key_cols
-    )
-    out_schema = f"{key_schema}, last_seen timestamp, stale boolean"
-    state_schema = "last_seen timestamp"
 
-    def monitor(key, batches, state: GroupState):
-        if state.hasTimedOut:
-            (last_seen,) = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [[*key, last_seen, True]],
-                columns=[*key_cols, "last_seen", "stale"],
-            )
-            return
-        newest = None
-        for pdf in batches:
-            batch_max = pdf[ts_col].max()
-            if newest is None or batch_max > newest:
-                newest = batch_max
-        if newest is None:
-            return
-        state.update((newest,))
+    def arm(state: GroupState, newest: pd.Timestamp) -> None:
         # fire when the watermark passes this event-time deadline; for a
         # LATE row whose deadline is already behind the watermark, clamp
         # to just past it (Spark rejects deadlines <= watermark) — the
         # key goes stale at the next watermark advance, which is the
         # earliest legal firing
         deadline = int(newest.value // 1_000_000) + timeout_ms
-        wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(deadline, wm + 1))
-        yield pd.DataFrame(
-            [[*key, newest, False]], columns=[*key_cols, "last_seen", "stale"]
-        )
+        state.setTimeoutTimestamp(max(deadline, state.getCurrentWatermarkMs() + 1))
 
-    return (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(*key_cols)
-        .applyInPandasWithState(
-            monitor,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _staleness_monitor(
+        stream_df.withWatermark(ts_col, watermark),
+        key_cols,
+        ts_col,
+        GroupStateTimeout.EventTimeTimeout,
+        arm,
     )
 
 

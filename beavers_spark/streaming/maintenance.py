@@ -40,9 +40,9 @@ import json
 import os
 import shutil
 import time
-from typing import Sequence
+from typing import Callable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -257,6 +257,155 @@ def guard_committed_waves(watermark: BatchWatermark, *paths: str) -> None:
                 "the stream (the replay rewrites and commits the wave), "
                 "then compact."
             )
+
+
+def read_partitions(
+    spark: SparkSession, path: str, part_col: str, values: list
+) -> DataFrame:
+    """Partition-pruned read of ONLY the ``part_col`` directories named
+    by ``values``, materialized (``localCheckpoint``) before any
+    overwrite of those directories — Spark refuses to overwrite a path
+    its plan still reads."""
+    return (
+        spark.read.parquet(path)
+        .filter(F.col(part_col).isin(values))
+        .localCheckpoint()
+    )
+
+
+def overwrite_partitions(df: DataFrame, path: str, part_col: str) -> None:
+    """The one dynamic partition overwrite of every partition-keyed
+    state writer: replaces exactly the ``part_col`` directories ``df``
+    holds rows for, set per WRITE so the shared session's overwrite
+    semantics are left alone (a session-level ``conf.set`` would
+    silently change every other writer in the application).
+
+    The repartition on ``part_col`` is load-bearing: without it
+    ``partitionBy`` writes one file per (task, partition) — measured
+    ~2,000 files per wave at 32 tasks × 64 buckets, each paying a
+    listing and footer read on the next wave's scan. Clustered, each
+    partition lands in exactly one write task, so one file per wave.
+    No explicit partition count: AQE sizes the exchange, so a small
+    wave is written by a few coalesced tasks instead of a fixed fan-out."""
+    (
+        df.repartition(F.col(part_col))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(part_col)
+        .parquet(path)
+    )
+
+
+#: characters Spark escapes in a partition directory name as ``%XX``
+#: (ExternalCatalogUtils.charToEscape)
+_PATH_ESCAPES = frozenset('"#%\'*/:=?\\\x7f{[]^') | frozenset(
+    map(chr, range(1, 32))
+)
+
+
+def _escape_path_name(s: str) -> str:
+    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPES else c for c in s)
+
+
+class MergeWave:
+    """The touched-partition merge wave shared by the partition-keyed
+    ``foreachBatch`` state kernels (``KeyedStateTable``,
+    ``ContinuousRollup``, ``ContinuousDistinct``, ``ContinuousQuantile``;
+    ``ContinuousTopK`` drives the same steps itself around its
+    truncation). A kernel reduces its batch to a lazy ``delta`` carrying
+    ``part_col`` and supplies ``merge(delta, current)``; one call runs,
+    in order: crash recovery, the replay skip, ONE materialization of
+    the delta, the touched-partition collect (none: mark and return), a
+    pruned read of just those partitions when the table exists, the
+    merge, the dynamic overwrite, one ``WaveMetrics`` row, the mark.
+    Cost per batch is O(batch + touched-partition rows), never a rescan
+    of history.
+
+    Null partition values must be filtered by the kernel's reduce step:
+    a None never ``isin``-matches stored rows while the overwrite would
+    still replace the null partition with just the delta."""
+
+    def __init__(self, path: str, part_col: str) -> None:
+        self.path = path
+        self.part_col = part_col
+        self.watermark = BatchWatermark(path)
+        #: one WaveMetrics per applied wave: rewrite bytes and the worst
+        #: per-partition file count, the sizing / compaction-due signal
+        self.metrics: list[WaveMetrics] = []
+        self._exists = False
+
+    def exists(self, spark: SparkSession) -> bool:
+        """Whether the table holds data; a True answer is cached (only
+        writes through this wave create the table)."""
+        if not self._exists:
+            self._exists = table_exists(spark, self.path)
+        return self._exists
+
+    def begin(self, batch_id: int) -> bool:
+        """Heal a compaction crashed between its two renames BEFORE the
+        watermark check or any write, then False for an applied batch."""
+        recover_compaction(self.path)
+        return not self.watermark.is_applied(batch_id)
+
+    def touched(self, delta: DataFrame) -> list[tuple]:
+        """``(value, string form)`` of every partition ``delta`` holds —
+        the string form is what names the partition's directory."""
+        col = F.col(self.part_col)
+        return [
+            tuple(r)
+            for r in delta.select(col, col.cast("string"))
+            .distinct()
+            .collect()
+        ]
+
+    def current(
+        self, spark: SparkSession, touched: list[tuple]
+    ) -> DataFrame | None:
+        """The stored rows of the touched partitions, or None before the
+        first write."""
+        if not self.exists(spark):
+            return None
+        return read_partitions(
+            spark, self.path, self.part_col, [v for v, _ in touched]
+        )
+
+    def commit(
+        self, merged: DataFrame, batch_id: int, touched: list[tuple]
+    ) -> None:
+        """Overwrite the touched partitions with ``merged``, account the
+        wave over just those directories (driver-side listing,
+        O(touched)), then mark the batch applied."""
+        overwrite_partitions(merged, self.path, self.part_col)
+        self._exists = True
+        prefix = f"{self.path}/{_escape_path_name(self.part_col)}="
+        files, nbytes, mx = partition_stats(
+            merged.sparkSession,
+            [prefix + _escape_path_name(s) for _, s in touched],
+        )
+        self.metrics.append(
+            WaveMetrics(batch_id, len(touched), files, nbytes, mx)
+        )
+        self.watermark.mark(batch_id)
+
+    def __call__(
+        self,
+        delta: DataFrame,
+        batch_id: int,
+        merge: Callable[[DataFrame, DataFrame], DataFrame],
+    ) -> None:
+        if not self.begin(batch_id):
+            return
+        # LAZY checkpoint: the touched collect forces it, so the batch is
+        # reduced once, in the same job, and the merge reads the
+        # materialized delta instead of re-running the reduction
+        delta = delta.localCheckpoint(eager=False)
+        touched = self.touched(delta)
+        if not touched:
+            self.watermark.mark(batch_id)
+            return
+        current = self.current(delta.sparkSession, touched)
+        merged = delta if current is None else merge(delta, current)
+        self.commit(merged, batch_id, touched)
 
 
 #: per-wave Bloom sidecar file name (underscore prefix: invisible to
@@ -1370,13 +1519,7 @@ def forget_partition_rows(
         r[0] for r in kept.select(part_col).distinct().collect()
     }
     if kept_parts:
-        (
-            kept.repartition(len(kept_parts), F.col(part_col))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(part_col)
-            .parquet(table_path)
-        )
+        overwrite_partitions(kept, table_path, part_col)
     for p in set(parts) - kept_parts:
         shutil.rmtree(
             os.path.join(table_path, f"{part_col}={p}"),

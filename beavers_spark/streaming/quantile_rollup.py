@@ -17,10 +17,12 @@ trade against sketch structures (t-digest/KLL) is explicitness: fixed
 edge bins), in exchange for EXACT mergeability, trivial state
 (``groups × n_bins`` longs), and engine-independent determinism.
 
-Per batch (the family's touched-buckets discipline): the batch is
-binned and counted — map-side combined, batch-sized — merged with the
-stored counts of JUST the touched buckets (partition-pruned read), and
-written back via dynamic partition overwrite. History is never re-read.
+The kernel is one of the partition-keyed kernels sharing
+``maintenance.MergeWave`` (docs/concepts/state_kernels.md states the
+wave contract): it bins and counts the batch — map-side combined,
+batch-sized; rows with a null event time (no bucket) or a null value
+(no bin) are dropped — and its merge sums the touched buckets' stored
+bin counts.
 
 Reference parity: extends the reference's state-node fold
 (dag.py:501-518); the reference has no quantile surface
@@ -32,11 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from beavers_spark.streaming.maintenance import (
-    BatchWatermark,
-    recover_compaction,
-    table_exists,
-)
+from beavers_spark.streaming.maintenance import MergeWave
 
 
 def quantiles_from_histogram(
@@ -138,8 +136,7 @@ class ContinuousQuantile:
         self.hi = float(hi)
         self.n_bins = n_bins
         self.bucket = bucket
-        self._initialized = False
-        self._watermark = BatchWatermark(path)
+        self._wave = MergeWave(path, "bucket")
 
     def _bin(self) -> F.Column:
         width = (self.hi - self.lo) / self.n_bins
@@ -158,66 +155,21 @@ class ContinuousQuantile:
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
 
-    def _table_exists(self, spark: SparkSession) -> bool:
-        return table_exists(spark, self.path)
+    def _merge(self, delta: DataFrame, current: DataFrame) -> DataFrame:
+        return (
+            delta.unionByName(current)
+            .groupBy("bucket", *self.keys, "bin")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # restore a compaction crashed between compact_parquet's two
-        # renames BEFORE the watermark check or any write (review r8)
-        recover_compaction(self.path)
-        # count-merging is not idempotent: replays must skip
-        if self._watermark.is_applied(batch_id) or batch_df.isEmpty():
-            return
-        # Null event time cannot be assigned a bucket, and a null value
-        # cannot be binned; worse, a None in the touched list never
-        # isin-matches stored rows while dynamic overwrite would still
-        # REPLACE the null partition with just this batch's delta —
-        # silently dropping accumulated state. Drop such rows up front.
-        batch_df = batch_df.filter(
-            F.col(self.ts_col).isNotNull()
-            & F.col(self.value_col).isNotNull()
-        )
-        spark = batch_df.sparkSession
-        delta = self._count(batch_df)
-        if self._initialized or self._table_exists(spark):
-            # probe the RAW batch, not delta — delta is then consumed
-            # exactly once (by the merge), not re-aggregated for the probe
-            touched = [
-                r["bucket"]
-                for r in batch_df.select(
-                    F.window(F.col(self.ts_col), self.bucket).start.alias(
-                        "bucket"
-                    )
-                )
-                .distinct()
-                .collect()
-            ]
-            if not touched:  # all rows were null-ts/value: nothing to merge
-                self._watermark.mark(batch_id)
-                return
-            current = (
-                spark.read.parquet(self.path)
-                .filter(F.col("bucket").isin(touched))
-                .localCheckpoint()
+        delta = self._count(
+            batch_df.filter(
+                F.col(self.ts_col).isNotNull()
+                & F.col(self.value_col).isNotNull()
             )
-            merged = (
-                delta.unionByName(current)
-                .groupBy("bucket", *self.keys, "bin")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        else:
-            merged = delta
-        # cluster by the partition column before partitionBy, else every
-        # write task splinters one file per bucket it holds
-        (
-            merged.repartition(F.col("bucket"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.path)
         )
-        self._initialized = True
-        self._watermark.mark(batch_id)
+        self._wave(delta, batch_id, self._merge)
 
     def read_histograms(self, spark: SparkSession) -> DataFrame:
         """Raw (bucket, *keys, bin, cnt) — mergeable further (e.g. roll

@@ -387,7 +387,9 @@ class ReplayDriver:
             batch = source.read_to(self.current_time)
             n = _batch_len(batch)
             if n:
-                dag_sources[name].set_stream(batch)
+                # _batch_len just proved non-emptiness (an isEmpty job
+                # for DataFrame payloads): the cycle must not probe again
+                dag_sources[name].set_stream(batch, known_nonempty=True)
                 total += n
         return total
 

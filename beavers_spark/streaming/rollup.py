@@ -1,21 +1,16 @@
 """Continuous rollup: an incrementally-maintained time-bucketed
 aggregate table (the hypertable/continuous-aggregate pattern), built on
-``foreachBatch`` + dynamic partition overwrite.
+``foreachBatch`` and the shared touched-partition merge wave
+(``maintenance.MergeWave``; docs/concepts/state_kernels.md states its
+contract).
 
-Each micro-batch only touches the time buckets it contains: the batch is
-pre-aggregated (map-side, tiny), merged with the CURRENT contents of
-just those buckets, and written back via dynamic partition overwrite —
-cost per batch is O(batch + touched-bucket rows), never a rescan of
-history. Readers see a plain parquet table partitioned by bucket,
-queryable mid-stream.
-
-At 100 TB: the rollup table is partitioned on the bucket column, so the
-merge reads only the touched partitions (partition pruning) and the
-overwrite replaces only those directories. Late data lands in its true
-bucket automatically — correctness does not depend on arrival order.
-Merge-in aggregation is not idempotent, so a ``BatchWatermark``
-(maintenance.py) skips batch ids Structured Streaming replays after a
-restart — without it a replayed batch would double-count.
+What this kernel adds: per (time bucket, keys) row counts and
+``sum_col`` totals — decomposable, so the batch is pre-aggregated
+(map-side, tiny) and merged into the touched buckets by summing. Late
+data lands in its true bucket automatically — correctness does not
+depend on arrival order. Rows with a null event time have no bucket and
+are dropped. Merge-in aggregation is not idempotent: the wave's batch
+watermark is what keeps a replayed batch from double-counting.
 """
 
 from __future__ import annotations
@@ -23,11 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from beavers_spark.streaming.maintenance import (
-    BatchWatermark,
-    recover_compaction,
-    table_exists,
-)
+from beavers_spark.streaming.maintenance import MergeWave
 
 
 class ContinuousRollup:
@@ -55,8 +46,7 @@ class ContinuousRollup:
         self.keys = keys
         self.sum_col = sum_col
         self.bucket = bucket
-        self._initialized = False
-        self._watermark = BatchWatermark(path)
+        self._wave = MergeWave(path, "bucket")
 
     def _aggregate(self, df: DataFrame) -> DataFrame:
         return (
@@ -70,54 +60,16 @@ class ContinuousRollup:
             )
         )
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # restore a compaction crashed between compact_parquet's two
-        # renames BEFORE the watermark check or any write (review r8)
-        recover_compaction(self.path)
-        # merge-in aggregation is NOT idempotent (a replayed batch would
-        # double-count into the touched buckets): skip applied batches
-        if self._watermark.is_applied(batch_id) or batch_df.isEmpty():
-            return
-        # null event time has no bucket; a None touched entry never
-        # isin-matches yet dynamic overwrite would still clobber the
-        # null partition with only this batch's delta (state loss)
-        batch_df = batch_df.filter(F.col(self.ts_col).isNotNull())
-        spark = batch_df.sparkSession
-        delta = self._aggregate(batch_df)
-        if self._initialized or self._table_exists(spark):
-            touched = [r["bucket"] for r in delta.select("bucket").distinct().collect()]
-            if not touched:  # every row was null-ts: nothing to merge
-                self._watermark.mark(batch_id)
-                return
-            # localCheckpoint materializes the touched buckets BEFORE the
-            # overwrite (Spark refuses to overwrite a path its plan still
-            # reads); the filter is partition-pruned so this reads only
-            # the touched directories
-            current = (
-                self.read(spark)
-                .filter(F.col("bucket").isin(touched))
-                .localCheckpoint()
-            )
-            merged = (
-                delta.unionByName(current)
-                .groupBy("bucket", *self.keys)
-                .agg(F.sum("n").alias("n"), F.sum("total").alias("total"))
-            )
-        else:
-            merged = delta
-        # per-write dynamic overwrite (replaces only the partitions in
-        # `merged`) without mutating the shared session's semantics
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.path)
+    def _merge(self, delta: DataFrame, current: DataFrame) -> DataFrame:
+        return (
+            delta.unionByName(current)
+            .groupBy("bucket", *self.keys)
+            .agg(F.sum("n").alias("n"), F.sum("total").alias("total"))
         )
-        self._initialized = True
-        self._watermark.mark(batch_id)
 
-    def _table_exists(self, spark: SparkSession) -> bool:
-        return table_exists(spark, self.path)
+    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        delta = self._aggregate(batch_df.filter(F.col(self.ts_col).isNotNull()))
+        self._wave(delta, batch_id, self._merge)
 
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.path)

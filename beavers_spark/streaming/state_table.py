@@ -4,18 +4,19 @@
 The reference keeps latest-row-per-key state in process memory
 (pyarrow_wrapper.py:82-91 ``_LastByKey``; examples/etfs.py:34-42
 ``GetLatest``) — impossible at 100 TB. ``KeyedStateTable`` keeps the same
-semantics in a parquet table **partitioned by a key-hash bucket**, so a
-micro-batch upsert costs O(batch + touched-bucket rows), never a rescan
-of the full key space:
+semantics in a parquet table **partitioned by a key-hash bucket**, one
+of the partition-keyed kernels sharing ``maintenance.MergeWave``
+(docs/concepts/state_kernels.md states the wave contract). What this
+kernel adds:
 
 1. the batch is reduced to its latest row per key (one window pass on
    the arrival order column — same contract as ``operators.last_by_keys``);
-2. only the buckets containing batch keys are read back (partition
-   pruning on the bucket column) and merged, latest ``order_by`` wins —
-   ties go to the incoming batch, matching upsert expectations;
-3. dynamic partition overwrite replaces exactly those bucket
-   directories. Overwrites are idempotent, so checkpointed replays of a
-   batch are safe (at-least-once in, exactly-once effect out).
+   a row with a null ``order_by`` has no place in that order and is
+   dropped;
+2. the merge keeps the latest ``order_by`` per key over the touched
+   buckets' stored rows and the delta — ties go to the incoming batch,
+   matching upsert expectations. The merge is idempotent, so the batch
+   watermark only skips wasted replays.
 
 ``n_buckets`` sizes the unit of rewrite: more buckets = finer pruning
 but more small files; at 100 TB pick buckets so one bucket ≈ one
@@ -30,17 +31,11 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from beavers_spark.operators.tabular import last_by_keys
-from beavers_spark.streaming.maintenance import (
-    BatchWatermark,
-    WaveMetrics,
-    partition_stats,
-    recover_compaction,
-    table_exists,
-)
+from beavers_spark.streaming.maintenance import MergeWave, forget_partition_rows
 
 _BUCKET = "__bucket"
 
@@ -69,24 +64,9 @@ class KeyedStateTable:
         self.keys = list(keys)
         self.order_by = order_by
         self.n_buckets = n_buckets
-        self._initialized = False
-        # the merge itself is idempotent (latest-wins over the same
-        # batch converges), so the watermark only skips wasted replays
-        self._watermark = BatchWatermark(path)
-        #: one WaveMetrics per applied wave: bytes-rewritten-per-wave and
-        #: files-per-bucket, the n_buckets sizing / compaction-due signal
-        self.metrics: list[WaveMetrics] = []
-
-    def _bucket(self) -> Column:
-        return F.pmod(F.hash(*self.keys), F.lit(self.n_buckets))
-
-    def _table_exists(self, spark: SparkSession) -> bool:
-        if self._initialized:
-            return True
-        if table_exists(spark, self.path):
-            self._initialized = True
-            return True
-        return False
+        self._wave = MergeWave(path, _BUCKET)
+        #: one WaveMetrics per applied wave (``MergeWave.metrics``)
+        self.metrics = self._wave.metrics
 
     def read(self, spark: SparkSession) -> DataFrame:
         """Current latest-row-per-key table (without the bucket column)."""
@@ -101,98 +81,31 @@ class KeyedStateTable:
         forgotten key is admitted as brand-new state. Idempotent;
         returns the number of bucket directories rewritten or
         removed."""
-        from beavers_spark.streaming.maintenance import (
-            forget_partition_rows,
-        )
-
-        if not self._table_exists(spark):
+        if not self._wave.exists(spark):
             return 0
-        rows = [
-            k if isinstance(k, tuple) else (k,) for k in keys
-        ]
+        rows = [k if isinstance(k, tuple) else (k,) for k in keys]
         if not rows:
             return 0
         id_df = spark.createDataFrame(rows, self.keys)
-        n = forget_partition_rows(
-            spark, self.path, id_df, self.keys, _BUCKET
-        )
-        if n:
-            # the forget may have emptied the table down to its
-            # zero-row schema file — re-probe rather than trust the
-            # cached flag
-            self._initialized = table_exists(spark, self.path)
-        return n
+        return forget_partition_rows(spark, self.path, id_df, self.keys, _BUCKET)
+
+    def _merge(self, delta: DataFrame, current: DataFrame) -> DataFrame:
+        # ties on order_by go to the batch: rank current rows below
+        # delta rows by a tiebreaker column
+        return last_by_keys(
+            delta.withColumn("__new", F.lit(1)).unionByName(
+                current.withColumn("__new", F.lit(0))
+            ),
+            self.keys,
+            [self.order_by, "__new"],
+        ).drop("__new")
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # restore a compaction crashed between compact_parquet's two
-        # renames BEFORE the watermark check or any write (review r8)
-        recover_compaction(self.path)
-        if self._watermark.is_applied(batch_id):
-            return
-        spark = batch_df.sparkSession
-        # batch-local upsert first: one row per key leaves this stage.
-        # localCheckpoint materializes the reduction ONCE, so the batch
-        # is scanned a single time per wave — the touched-bucket probe
-        # and the merge both read the (small, one-row-per-key)
-        # checkpointed delta instead of re-scanning the raw batch (a
-        # probe on the raw batch cost a second full batch scan per wave;
-        # the checkpoint also pre-empts the merge re-running the window)
-        delta = last_by_keys(batch_df, self.keys, [self.order_by]).withColumn(
-            _BUCKET, self._bucket()
-        ).localCheckpoint()
-        touched = [
-            r[_BUCKET] for r in delta.select(_BUCKET).distinct().collect()
-        ]
-        if not touched:
-            self._watermark.mark(batch_id)
-            return
-        if self._table_exists(spark):
-            # partition-pruned read of ONLY the touched buckets;
-            # localCheckpoint materializes them before their directories
-            # are overwritten (Spark refuses to overwrite a path its
-            # plan still reads)
-            current = (
-                spark.read.parquet(self.path)
-                .filter(F.col(_BUCKET).isin(touched))
-                .localCheckpoint()
-            )
-            # ties on order_by go to the batch: rank current rows below
-            # delta rows by a tiebreaker column
-            merged = last_by_keys(
-                delta.withColumn("__new", F.lit(1)).unionByName(
-                    current.withColumn("__new", F.lit(0))
-                ),
-                self.keys,
-                [self.order_by, "__new"],
-            ).drop("__new")
-        else:
-            merged = delta
-        # per-WRITE dynamic overwrite: only the touched bucket
-        # directories are replaced, and the shared session's overwrite
-        # semantics are left alone (a session-level conf.set here would
-        # silently change every other writer in the application).
-        # The repartition on the bucket column is load-bearing: the merge
-        # window leaves rows key-hash-partitioned, so partitionBy would
-        # otherwise write (tasks × buckets) splinter files per wave —
-        # measured ~2,000 files/wave at 32 tasks × 64 buckets, each paying
-        # a listing + footer read on the NEXT wave's touched-bucket scan.
-        # Clustering by bucket first writes one file per touched bucket.
-        (
-            merged.repartition(self.n_buckets, F.col(_BUCKET))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(_BUCKET)
-            .parquet(self.path)
+        delta = last_by_keys(
+            batch_df.filter(F.col(self.order_by).isNotNull()),
+            self.keys,
+            [self.order_by],
+        ).withColumn(
+            _BUCKET, F.pmod(F.hash(*self.keys), F.lit(self.n_buckets))
         )
-        self._initialized = True
-        # post-write accounting over ONLY the touched bucket directories
-        # (driver-side FS listing, O(touched)): these are exactly the
-        # bytes this wave rewrote, and the worst per-bucket file count
-        # shows when compaction is due
-        files, nbytes, mx = partition_stats(
-            spark, [f"{self.path}/{_BUCKET}={b}" for b in touched]
-        )
-        self.metrics.append(
-            WaveMetrics(batch_id, len(touched), files, nbytes, mx)
-        )
-        self._watermark.mark(batch_id)
+        self._wave(delta, batch_id, self._merge)

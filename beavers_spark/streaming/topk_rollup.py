@@ -17,16 +17,17 @@ subtraction:
 - err <= n / (capacity + 1);
 - every item with true count > n/(capacity+1) IS in the summary.
 
-Per batch (the touched-buckets discipline shared by the rollup family):
-the batch is counted exactly per (bucket, keys, item) — map-side
-combined, batch-sized — merged with the stored summaries of JUST the
-touched buckets (partition-pruned read), truncated per group, and
-written back via dynamic partition overwrite. The per-group subtraction
-totals live in a sibling ``<path>_err`` table, same bucket partitioning.
-Cost is O(batch + touched-group summaries); history is never re-read,
-and state is groups x capacity rows no matter how many distinct items
-stream through. At 100 TB this is "trending items per hour over years
-of events" with bounded state.
+The kernel drives the steps of ``maintenance.MergeWave`` (the shared
+touched-partition wave; docs/concepts/state_kernels.md states its
+contract) around what it adds: the batch is counted exactly per
+(bucket, keys, item) — rows with a null event time have no bucket and
+are dropped — summed with the touched buckets' stored summaries,
+truncated per group on every wave (the first one included), and the
+per-group subtraction totals live in a sibling ``<path>_err`` table,
+same bucket partitioning, written BEFORE the counters. State is
+groups x capacity rows no matter how many distinct items stream
+through. At 100 TB this is "trending items per hour over years of
+events" with bounded state.
 
 Reference parity: extends the reference's state-node fold
 (dag.py:501-518) with a mergeable-summary state the reference cannot
@@ -39,8 +40,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from beavers_spark.streaming.maintenance import (
-    BatchWatermark,
-    recover_compaction,
+    MergeWave,
+    overwrite_partitions,
+    read_partitions,
     table_exists,
 )
 
@@ -74,8 +76,7 @@ class ContinuousTopK:
         self.item_col = item_col
         self.bucket = bucket
         self.capacity = capacity
-        self._initialized = False
-        self._watermark = BatchWatermark(path)
+        self._wave = MergeWave(path, "bucket")
 
     def _count(self, df: DataFrame) -> DataFrame:
         return (
@@ -87,49 +88,28 @@ class ContinuousTopK:
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
 
-    def _table_exists(self, spark: SparkSession) -> bool:
-        return table_exists(spark, self.path)
-
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # restore a compaction crashed between compact_parquet's two
-        # renames BEFORE the watermark check or any write (review r8)
-        recover_compaction(self.path)
+        wave = self._wave
         # truncation makes the merge non-idempotent: replays must skip
-        if self._watermark.is_applied(batch_id) or batch_df.isEmpty():
+        if not wave.begin(batch_id):
             return
-        # A null event time has no bucket — and a None in the touched
-        # list never isin-matches stored rows while dynamic overwrite
-        # would still replace the null partition with only this batch's
-        # delta, dropping accumulated state. Drop null-ts rows up front.
-        batch_df = batch_df.filter(F.col(self.ts_col).isNotNull())
         spark = batch_df.sparkSession
-        delta = self._count(batch_df)
-        # the touched-bucket probe runs on the raw batch: the counter
-        # merge AND the error ledger both prune their state reads with it
-        touched = [
-            r["bucket"]
-            for r in batch_df.select(
-                F.window(F.col(self.ts_col), self.bucket).start.alias("bucket")
-            )
-            .distinct()
-            .collect()
-        ]
+        delta = self._count(
+            batch_df.filter(F.col(self.ts_col).isNotNull())
+        ).localCheckpoint(eager=False)
+        # the touched buckets prune BOTH state reads: counters and ledger
+        touched = wave.touched(delta)
         if not touched:
-            self._watermark.mark(batch_id)
+            wave.watermark.mark(batch_id)
             return
-        if self._initialized or self._table_exists(spark):
-            current = (
-                spark.read.parquet(self.path)
-                .filter(F.col("bucket").isin(touched))
-                .localCheckpoint()
-            )
+        current = wave.current(spark, touched)
+        combined = delta
+        if current is not None:
             combined = (
                 delta.unionByName(current)
                 .groupBy("bucket", *self.keys, "item")
                 .agg(F.sum("cnt").alias("cnt"))
             )
-        else:
-            combined = delta
         # Misra-Gries truncation per group: subtract the (capacity+1)-th
         # largest count from every counter, drop the non-positives. The
         # rank window and the subtraction run in one pass; d is the
@@ -137,9 +117,9 @@ class ContinuousTopK:
         grp = Window.partitionBy("bucket", *self.keys).orderBy(
             F.col("cnt").desc(), F.col("item").asc()
         )
-        # one materialization: the ranked frame feeds the counter write,
-        # the error ledger AND its touched-bucket probe — unchecked it
-        # would re-count the batch and re-run the window three times
+        # one materialization: the ranked frame feeds the counter write
+        # AND the error ledger — unchecked it would re-count the batch
+        # and re-run the window twice
         ranked = (
             combined.withColumn("rnk", F.row_number().over(grp))
             .withColumn(
@@ -163,11 +143,10 @@ class ContinuousTopK:
             ranked.groupBy("bucket", *self.keys)
             .agg(F.max("d").alias("err"))
         )
-        if self._initialized or self._err_exists(spark):
-            current_err = (
-                spark.read.parquet(self.err_path)
-                .filter(F.col("bucket").isin(touched))
-                .localCheckpoint()
+        # the ledger is written first, so it can exist without counters
+        if current is not None or table_exists(spark, self.err_path):
+            current_err = read_partitions(
+                spark, self.err_path, "bucket", [v for v, _ in touched]
             )
             err_delta = (
                 err_delta.unionByName(current_err)
@@ -181,25 +160,8 @@ class ContinuousTopK:
         # under a stale err, silently breaking the lower bound. A crash
         # after the counter write but before mark keeps the
         # BatchWatermark-documented double-apply window.
-        (
-            err_delta.repartition(F.col("bucket"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.err_path)
-        )
-        (
-            merged.repartition(F.col("bucket"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.path)
-        )
-        self._initialized = True
-        self._watermark.mark(batch_id)
-
-    def _err_exists(self, spark: SparkSession) -> bool:
-        return table_exists(spark, self.err_path)
+        overwrite_partitions(err_delta, self.err_path, "bucket")
+        wave.commit(merged, batch_id, touched)
 
     def read(self, spark: SparkSession, k: int = 10) -> DataFrame:
         """Top-``k`` per (bucket, *keys): item, count bounds, rank.

@@ -39,3 +39,33 @@ def test_concept_pages_reference_real_things():
             assert os.path.exists(os.path.join(ROOT, ex)), f"{page}: {ex}"
         for tool in re.findall(r"`(tools/[\w.]+)`", text):
             assert os.path.exists(os.path.join(ROOT, tool)), f"{page}: {tool}"
+
+
+def test_coverage_cites_real_tests_and_names():
+    """Every ``test_*.py`` file and every ``path.py::Name`` COVERAGE.md
+    cites must exist — a deleted module or test cannot leave a stale
+    row. Paths resolve under ``tests/`` or ``beavers_spark/``; a Name
+    must be defined at module level (``def``/``class``/assignment) or
+    as a method of that module."""
+    text = _read("COVERAGE.md")
+
+    def resolve(rel: str) -> str | None:
+        for base in ("", "tests", "beavers_spark"):
+            full = os.path.join(ROOT, base, rel)
+            if os.path.isfile(full):
+                return full
+        return None
+
+    for name in set(re.findall(r"\btest_\w+\.py\b", text)):
+        assert os.path.isfile(os.path.join(ROOT, "tests", name)), name
+    for rel, names in set(re.findall(r"([\w/]+\.py)::([\w/]+)", text)):
+        full = resolve(rel)
+        assert full is not None, rel
+        with open(full) as fh:
+            src = fh.read()
+        for name in names.split("/"):
+            assert re.search(
+                rf"^\s*(?:async\s+)?(?:def|class)\s+{name}\b|^{name}\s*=",
+                src,
+                re.M,
+            ), f"{rel}::{name}"

@@ -180,6 +180,25 @@ def test_keyed_state_wave_metrics(spark, tmp_path):
     assert [m.batch_id for m in state.metrics] == [0, 1]
 
 
+def test_merge_wave_metrics_find_timestamp_partitions(spark, tmp_path):
+    """Time-bucket partition directories carry Spark's escaped names
+    (``bucket=2024-01-01 00%3A00%3A00``): the wave's accounting must
+    list those directories, not miss them as absent."""
+    from beavers_spark.streaming import ContinuousRollup
+
+    rollup = ContinuousRollup(
+        str(tmp_path / "r"), ts_col="ts", keys=["k"], sum_col="v"
+    )
+    batch = spark.createDataFrame(
+        [("2024-01-01 00:10:00", "a", 1.0), ("2024-01-01 01:10:00", "b", 2.0)],
+        "ts string, k string, v double",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    rollup(batch, 0)
+    [m] = rollup._wave.metrics
+    assert (m.partitions, m.files, m.max_files_per_partition) == (2, 2, 1)
+    assert m.bytes > 0
+
+
 def test_near_dedup_wave_metrics(spark, tmp_path):
     dedup = IncrementalNearDedup(
         str(tmp_path / "state"), str(tmp_path / "pairs"),

@@ -75,14 +75,6 @@ def test_quantiles_within_bin_width_of_exact(spark, tmp_path):
             assert abs(r["value"] - true_v) <= BIN_W, (r, true_v)
 
 
-def test_replay_and_empty_batch_skip(spark, tmp_path):
-    q = _make(tmp_path, spark)
-    before = sorted(map(tuple, q.read_histograms(spark).collect()))
-    q(_events(spark), 0)  # replayed id
-    q(_events(spark).limit(0), 99)  # empty
-    assert sorted(map(tuple, q.read_histograms(spark).collect())) == before
-
-
 def test_null_ts_rows_do_not_clobber_state(spark, tmp_path):
     """A batch containing null-ts/null-value rows must not dynamic-
     overwrite away previously accumulated state (the None bucket never
@@ -106,7 +98,7 @@ def test_null_ts_rows_do_not_clobber_state(spark, tmp_path):
         key=lambda r: (str(r["bucket"]), str(r["event_type"]), r["bin"]),
     )
     assert after == before
-    assert q._watermark.is_applied(100)
+    assert q._wave.watermark.is_applied(100)
 
     with pytest.raises(ValueError):
         q.read(spark, [])

@@ -331,3 +331,45 @@ def test_batch_len_handles_empty_dataframe(spark):
     assert _batch_len(df) == 1  # non-empty, count unknown
     assert _batch_len([1, 2]) == 2
     assert _batch_len(None) == 0
+
+
+def test_replay_cycle_probes_dataframe_emptiness_once(spark, monkeypatch):
+    """The replay driver's record count is already an ``isEmpty`` job
+    for a DataFrame payload; the source node must trust it instead of
+    probing the same slice again inside ``Dag.execute``."""
+    batch = spark.createDataFrame([(1.0,)], "qty double")
+    probes = []
+    cls = type(batch)
+    is_empty = cls.isEmpty
+
+    def counting(self):
+        if self is batch:
+            probes.append(1)
+        return is_empty(self)
+
+    monkeypatch.setattr(cls, "isEmpty", counting)
+
+    class OneBatchSource:
+        def __init__(self) -> None:
+            self.delivered = False
+
+        def read_to(self, timestamp):
+            if self.delivered:
+                return None
+            self.delivered = True
+            return batch
+
+        def get_next(self):
+            return UTC_MAX if self.delivered else ts(0)
+
+    dag = Dag(spark)
+    dag.sink("out", dag.source_table("qty double", "trades"))
+    driver = ReplayDriver(
+        dag,
+        ReplayContext(start=ts(0), end=ts(60), frequency=pd.Timedelta(hours=1)),
+        sources={"trades": OneBatchSource()},
+    )
+    driver.run_cycle()
+    assert driver.metrics[-1].records == 1
+    assert dag.get_sink_value("out") is batch
+    assert len(probes) == 1

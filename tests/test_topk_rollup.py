@@ -141,4 +141,4 @@ def test_null_ts_rows_do_not_clobber_state(spark, tmp_path):
     top(nulls, 100)
     assert snap(top.read_summaries(spark)) == counters
     assert snap(top.read(spark, 5)) == ranked
-    assert top._watermark.is_applied(100)
+    assert top._wave.watermark.is_applied(100)
